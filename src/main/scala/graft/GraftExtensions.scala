@@ -21,7 +21,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo(clazz.getName, name), builder))
     }
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    e.injectOptimizerRule(_ => graft.plans.TopOnePerKeyRule)
     e.injectOptimizerRule(_ => graft.plans.RangeJoinRule)
   }
 }

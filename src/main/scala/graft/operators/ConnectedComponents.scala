@@ -23,12 +23,13 @@ import org.apache.spark.sql.types.DecimalType
   * unchanged label-sum potential.
   *
   * Lineage is truncated per iteration so the plan does not double —
-  * with `reliable = false` via localCheckpoint (executor-block storage,
-  * fastest), with `reliable = true` via checkpoint() to the configured
-  * checkpoint dir, which survives executor loss: on a 1000-executor
-  * cluster a multi-hour BSP loop over localCheckpoint blocks dies with
-  * the first lost executor, so production runs at scale should pass
-  * `reliable = true` (and set `SparkContext.setCheckpointDir` to a
+  * by default via localCheckpoint (executor-block storage, fastest);
+  * under the session's durability knob ([[Materialize.reliable]],
+  * `spark.graft.reliableCheckpoints=true`) via checkpoint() to the
+  * configured checkpoint dir, which survives executor loss: on a
+  * 1000-executor cluster a multi-hour BSP loop over localCheckpoint
+  * blocks dies with the first lost executor, so production runs at
+  * scale should set the knob (and `SparkContext.setCheckpointDir` on a
   * durable FS). This is the standard BSP/Pregel shape expressed in
   * DataFrame operators.
   */
@@ -47,22 +48,19 @@ object ConnectedComponents {
     * result (the potential-sum probe would otherwise NPE on
     * sum-of-nothing = NULL).
     *
-    * `reliable = true` requires `spark.sparkContext.setCheckpointDir` to
-    * be set (IllegalStateException otherwise, before any work runs).
+    * Reliable mode requires `spark.sparkContext.setCheckpointDir` to be
+    * set (IllegalStateException otherwise, before any work runs).
     */
   def run(edges: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 20, reliable: Boolean = false): DataFrame =
-    runWithStats(edges, aCol, bCol, maxIter, reliable)._1
+      maxIter: Int = 20): DataFrame =
+    runWithStats(edges, aCol, bCol, maxIter)._1
 
   /** As [[run]], and also returns the number of BSP rounds executed
     * (including the final unchanged-potential confirmation round) —
     * observable so tests can pin the O(log diameter) bound. */
   def runWithStats(edges: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 20, reliable: Boolean = false): (DataFrame, Int) = {
-    if (reliable &&
-        edges.sparkSession.sparkContext.getCheckpointDir.isEmpty)
-      throw new IllegalStateException(
-        "reliable = true needs SparkContext.setCheckpointDir(<durable fs>)")
+      maxIter: Int = 20): (DataFrame, Int) = {
+    val reliable = Materialize.reliable(edges.sparkSession)
     // NON-eager truncation: the checkpoint materializes when the
     // potential probe below runs its aggregate, so each BSP round costs
     // ONE driver-blocking action (probe + truncate fused), not two.
@@ -72,7 +70,7 @@ object ConnectedComponents {
     // lineage after the probe job already computed it (the
     // persist-or-compute-twice contract in RDD.checkpoint's own docs)
     // — 2x work per BSP round, hours of duplicated compute on the
-    // multi-hour 100 TB loop this flag exists for. The cache is
+    // multi-hour 100 TB loop this knob exists for. The cache is
     // dropped right after each probe: by then the round's rows live in
     // the checkpoint files and every later read goes there.
     // (localCheckpoint needs none of this — it persists internally.)

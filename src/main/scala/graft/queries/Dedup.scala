@@ -794,8 +794,7 @@ object Dedup {
     // transitive closure over the same pairs.
     "q67_dedup_clusters" -> ((s, d) => {
       val edges = jaccardPairsOf(docs(s, d), 0.5).select("a_id", "b_id")
-      graft.operators.ConnectedComponents.run(edges, "a_id", "b_id",
-          reliable = graft.operators.Materialize.reliable(s))
+      graft.operators.ConnectedComponents.run(edges, "a_id", "b_id")
         .withColumnRenamed("node", "doc_id")
         .orderBy("doc_id")
     }),
@@ -811,8 +810,7 @@ object Dedup {
     "q102_cluster_canon" -> ((s, d) => {
       val edges = bandPairsOf(signaturesOf(docs(s, d)))
         .select("a_id", "b_id")
-      val cl = graft.operators.ConnectedComponents.run(edges, "a_id", "b_id",
-          reliable = graft.operators.Materialize.reliable(s))
+      val cl = graft.operators.ConnectedComponents.run(edges, "a_id", "b_id")
         .withColumnRenamed("node", "doc_id")
       Tables.load(s, d, "documents").select("doc_id", "n_chars")
         .join(cl, Seq("doc_id"), "left")

@@ -386,27 +386,23 @@ object Relational {
         // (suite convention NULLS LAST; Spark asc default is FIRST)
         .orderBy(col("bin").asc_nulls_last)),
 
-    // q81: top-3 orders per customer via the bounded TopKAgg aggregator
-    // — NOT the row_number window (q17/q18 cover that shape): the
-    // window shuffles and sorts every row of every group, while the
-    // aggregator keeps O(k) state per group, partially aggregates
-    // map-side, and merges associatively — the per-group analog of
-    // TakeOrderedAndProject. PlanSpec asserts the plan has no Window.
+    // q81: top-3 orders per customer, row_number() <= k. Spark plans
+    // the rank filter as WindowGroupLimit (Partial below the hash
+    // exchange, Final above it), so per-group state stays bounded
+    // map-side and only <= k rows per customer and map task shuffle —
+    // the per-group analog of TakeOrderedAndProject. PlanSpec pins the
+    // Partial limit below the exchange.
     "q81_group_topk" -> ((s, d) => {
-      val topk = udaf(new graft.functions.TopKAgg(3),
-        org.apache.spark.sql.Encoders.product[graft.functions.TopKEntry])
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("o_custkey")
+        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
       t(s, d, "orders")
-        // domain pin (mirrored in the oracle): the aggregator's entry
-        // type holds a primitive Double, so a NULL price would rank as
-        // 0.0 while the oracle's row_number ranks the NULL row — pin
-        // the non-null domain explicitly instead
+        // domain pin, mirrored in the oracle: NULL prices are not
+        // ranked
         .filter(col("o_totalprice").isNotNull)
-        .groupBy("o_custkey")
-        .agg(topk(col("o_totalprice"), col("o_orderkey")).as("top"))
-        .select(col("o_custkey"), posexplode(col("top")))
-        .select(col("o_custkey"), col("col.id").as("o_orderkey"),
-          col("col.v").as("o_totalprice"),
-          (col("pos") + 1).cast("long").as("rn"))
+        .withColumn("rn", row_number().over(w).cast("long"))
+        .filter(col("rn") <= 3)
+        .select("o_custkey", "o_orderkey", "o_totalprice", "rn")
         .orderBy("o_custkey", "rn")
     }),
 

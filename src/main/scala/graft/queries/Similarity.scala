@@ -910,8 +910,7 @@ object Similarity {
     // closure over the same edge predicate.
     "q117_semantic_dedup" -> ((s, d) => {
       val edges = embedNearDupEdges(emb(s, d), 0.3).select("a_id", "b_id")
-      graft.operators.ConnectedComponents.run(edges, "a_id", "b_id",
-          reliable = graft.operators.Materialize.reliable(s))
+      graft.operators.ConnectedComponents.run(edges, "a_id", "b_id")
         .filter(col("node") =!= col("cluster_id"))
         .select(col("node").as("vec_id"), col("cluster_id").as("kept_by"))
         .orderBy("vec_id")

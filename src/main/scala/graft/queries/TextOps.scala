@@ -813,23 +813,19 @@ object TextOps {
     // smallest content-hash prefix, a uniform draw that every engine,
     // run, and partitioning reproduces bit-for-bit and that stays
     // stable under corpus append (a doc's key never changes). The sort
-    // key is the first 13 hex chars of md5(text) = 52 bits — EXACT in
-    // a double, so TopKAgg (O(k) state, map-side partials — no
-    // per-stratum full sort) ranks identically to the oracle's
-    // fixed-width hex string order; a 52-bit prefix tie (~n²/2^53 per
-    // stratum) would break on doc_id in both engines alike.
+    // key is the first 13 hex chars of md5(text), ranked as the same
+    // fixed-width string the oracle orders by, doc_id breaking prefix
+    // ties. row_number() <= k plans as WindowGroupLimit (Partial
+    // map-side, Final after the exchange): no per-stratum full sort.
     "q92_strata_sample" -> ((s, d) => {
-      val topk = udaf(new graft.functions.TopKAgg(20),
-        org.apache.spark.sql.Encoders.product[graft.functions.TopKEntry])
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("lang")
+        .orderBy(substring(md5(col("text")), 1, 13), col("doc_id"))
       Tables.load(s, d, "documents")
         .select(col("lang"), col("doc_id"),
-          expr("-cast(conv(substr(md5(text), 1, 13), 16, 10) as double)")
-            .as("v"))
-        .groupBy("lang")
-        .agg(topk(col("v"), col("doc_id")).as("top"))
-        .select(col("lang"), posexplode(col("top")))
-        .select(col("lang"), (col("pos") + 1).cast("long").as("rn"),
-          col("col.id").as("doc_id"))
+          row_number().over(w).cast("long").as("rn"))
+        .filter(col("rn") <= 20)
+        .select("lang", "rn", "doc_id")
         .orderBy("lang", "rn")
     }),
 
@@ -838,10 +834,10 @@ object TextOps {
     // uniform strata samples and q80's fixed per-lang rates. The
     // Efraimidis–Spirakis key ln(u)/w (order-equivalent to the textbook
     // u^(1/w), minus the cross-engine pow() risk) makes "keep the
-    // top-k keys" EXACTLY a weighted draw; u is the q92 52-bit md5
-    // prefix (+1 so ln never sees 0), so the sample is a pure content
-    // function — reproducible across runs/engines/partitionings and
-    // stable under append, and the scan stays map-side feeding ONE
+    // top-k keys" EXACTLY a weighted draw; u is the 52-bit md5 prefix
+    // q92 ranks on (+1 so ln never sees 0), so the sample is a pure
+    // content function — reproducible across runs/engines/partitionings
+    // and stable under append, and the scan stays map-side feeding ONE
     // TakeOrdered (no shuffle, no global sort, no RNG state). Ranked
     // on the exact double key (identical expression tree both
     // engines), doc_id tie-break; rounded only for display.
@@ -1664,8 +1660,7 @@ object TextOps {
                ORDER BY skey_raw DESC, doc_id LIMIT 25) t
          ORDER BY skey_raw DESC, doc_id""",
 
-    // fixed-width lowercase hex: string order == numeric order of the
-    // 52-bit prefix the Spark side ranks on
+    // the Spark side orders by the same fixed-width hex prefix string
     "q92_strata_sample" ->
       """SELECT lang, rn, doc_id FROM (
            SELECT lang, doc_id,

@@ -149,21 +149,27 @@ class DedupSpec extends SparkSpec {
   }
 
   test("connected components: reliable=true checkpoints and still converges") {
-    // without a checkpoint dir it must fail fast, before any Spark jobs
+    // spark.graft.reliableCheckpoints=true switches CC's per-round
+    // truncation to checkpoint(); without a checkpoint dir it must fail
+    // fast, before any Spark jobs
+    val key = graft.operators.Materialize.ReliableKey
     val edges = Seq((5L, 3L), (3L, 9L)).toDF("a_id", "b_id")
+    spark.conf.set(key, "true")
     spark.sparkContext.setCheckpointDir(null)
-    intercept[IllegalStateException] {
-      graft.operators.ConnectedComponents
-        .run(edges, "a_id", "b_id", reliable = true)
-    }
-    val dir = java.nio.file.Files.createTempDirectory("cc-ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
     try {
+      intercept[IllegalStateException] {
+        graft.operators.ConnectedComponents.run(edges, "a_id", "b_id")
+      }
+      val dir = java.nio.file.Files.createTempDirectory("cc-ckpt")
+      spark.sparkContext.setCheckpointDir(dir.toString)
       val before = spark.sparkContext.getPersistentRDDs.size
       val cc = graft.operators.ConnectedComponents
-        .run(edges, "a_id", "b_id", reliable = true)
+        .run(edges, "a_id", "b_id")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       assert(cc == Map(3L -> 3L, 5L -> 3L, 9L -> 3L))
+      val written = java.nio.file.Files.walk(dir)
+        .filter(p => java.nio.file.Files.isRegularFile(p)).count()
+      assert(written > 0, "reliable CC must write durable checkpoints")
       // the r13 persist-before-checkpoint fix (stops the checkpoint
       // write from recomputing each round) must also RELEASE every
       // round's cache once the checkpoint files hold the data — a
@@ -171,9 +177,11 @@ class DedupSpec extends SparkSpec {
       // multi-hour 100 TB loop
       assert(spark.sparkContext.getPersistentRDDs.size <= before,
         "reliable CC leaked per-round caches")
-    } finally spark.sparkContext.setCheckpointDir(null)
+    } finally {
+      spark.conf.unset(key)
+      spark.sparkContext.setCheckpointDir(null)
+    }
   }
-
   test("q103/q104 materialization honors spark.graft.reliableCheckpoints") {
     // default mode (localCheckpoint) vs reliable mode (durable
     // checkpoint()) must produce identical results, reliable mode must

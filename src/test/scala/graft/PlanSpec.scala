@@ -223,14 +223,50 @@ class PlanSpec extends SparkSpec {
       "bucketed twin must not fall back to BNLJ")
   }
 
-  test("q81 group top-k aggregates with no Window operator") {
-    // the bounded aggregator must plan as a (partial) aggregate, never
-    // degrade to the all-rows window sort it replaces
-    val p = finalPlan("q81_group_topk")
-    assert(!p.contains("Window"), s"expected no Window:\n$p")
-    assert(p.contains("Aggregate"), "expected an aggregate plan")
+  test("q81/q92 group top-k plan a Partial WindowGroupLimit below " +
+      "their first hash exchange") {
+    // row_number() <= k must keep per-group state bounded MAP-SIDE:
+    // Spark's WindowGroupLimit in Partial mode trims each map task to
+    // <= k rows per group before the hashpartitioning shuffle, and a
+    // Final one re-applies the bound after it. Losing the Partial half
+    // (a threshold change, an extra projection between filter and
+    // window) silently shuffles every row of every group.
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.QueryStageExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.{
+      Final, Partial, WindowGroupLimitExec, WindowGroupLimitMode}
+    // AQE materializes sub-stages as leaf QueryStageExec nodes — walk
+    // through them
+    def below(p: SparkPlan): Seq[SparkPlan] = (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case other => other.children
+    }).flatMap(c => c +: below(c))
+    def hashExchange(p: SparkPlan): Boolean = p match {
+      case e: ShuffleExchangeExec =>
+        e.outputPartitioning.isInstanceOf[HashPartitioning]
+      case _ => false
+    }
+    def limit(mode: WindowGroupLimitMode)(p: SparkPlan): Boolean = p match {
+      case w: WindowGroupLimitExec => w.mode == mode
+      case _ => false
+    }
+    Seq("q81_group_topk", "q92_strata_sample").foreach { n =>
+      val df = SparkEntry.queries(n)(spark, sf)
+      df.collect()
+      val nodes = below(df.queryExecution.executedPlan)
+      val plan = df.queryExecution.executedPlan.toString
+      // the first exchange rows reach: no hash exchange beneath it
+      val first = nodes.filter(e =>
+        hashExchange(e) && !below(e).exists(hashExchange))
+      assert(first.size == 1, s"$n: expected one first hash exchange:\n$plan")
+      assert(below(first.head).exists(limit(Partial)),
+        s"$n: no Partial WindowGroupLimit below the exchange:\n$plan")
+      assert(nodes.exists(limit(Final)),
+        s"$n: no Final WindowGroupLimit:\n$plan")
+    }
   }
-
   test("q35 signatures are map-only: one exchange (presentation sort)") {
     // signature computation must never shuffle per-shingle rows — the
     // only exchanges allowed are the final orderBy of the query itself

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.MinHashAggregator
 import graft.queries.Dedup
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
@@ -229,20 +228,6 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("property: minhash sketch merge is commutative and associative") {
-    val agg = new MinHashAggregator(8)
-    val tokens = Gen.listOfN(6, vocab)
-    forSamples(Gen.zip(tokens, tokens, tokens), 20) {
-      case (a, b, c) =>
-        def sk(t: List[String]) = agg.reduce(agg.zero, t)
-        val ab_c = agg.merge(agg.merge(sk(a), sk(b)), sk(c)).toSeq
-        val a_bc = agg.merge(sk(a), agg.merge(sk(b), sk(c))).toSeq
-        val ba = agg.merge(sk(b), sk(a)).toSeq
-        assert(ab_c == a_bc)
-        assert(agg.merge(sk(a), sk(b)).toSeq == ba)
-    }
-  }
-
   test("property: minhash bands collide for identical texts (any corpus)") {
     forSamples(textGen, 10) { t =>
       val df = Dedup.withTok(
@@ -323,26 +308,6 @@ class PropertySpec extends SparkSpec {
         assert(est <= c && est >= c - slack,
           s"$t est=$est not in [${c - slack}, $c]")
       }
-    }
-  }
-
-  test("property: bounded top-k equals full sort-take under any split") {
-    val k = 3
-    val agg = new graft.functions.TopKAgg(k)
-    val gen = for {
-      n <- Gen.choose(0, 60)
-      vs <- Gen.listOfN(n, Gen.chooseNum(-50, 50))
-      cuts <- Gen.listOfN(3, Gen.choose(0, n))
-    } yield (vs.zipWithIndex.map { case (v, i) =>
-      graft.functions.TopKEntry(v.toDouble, i.toLong) }, cuts)
-    forSamples(gen, 25) { case (entries, cuts) =>
-      val bounds = (List(0) ++ cuts ++ List(entries.size)).distinct.sorted
-      val parts = bounds.zip(bounds.tail).map { case (a, b) =>
-        entries.slice(a, b) }
-      val got = agg.finish(parts.map(p => p.foldLeft(agg.zero)(agg.reduce))
-        .foldLeft(agg.zero)(agg.merge))
-      val expect = entries.sortBy(e => (-e.v, e.id)).take(k)
-      assert(got == expect, s"got $got expect $expect")
     }
   }
 
