@@ -18,9 +18,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DecimalType, LongType}
   *  - a NULL element on either side contributes nothing (a NULL decimal
   *    product is skipped by SUM);
   *  - if NO pair contributes — empty arrays, or every pair NULL — the
-  *    result is NULL (SUM over zero rows: the (vec, centroid) group
-  *    never existed in the relational form; callers filter NULL dots to
-  *    reproduce that absence);
+  *    result is NULL (SUM over zero rows or over NULL products); an
+  *    empty vector has no (vec, centroid) group at all in the
+  *    relational form, so callers drop empty vectors before the call
+  *    (Similarity.centroidScores);
   *  - mismatched lengths throw: the relational join would silently
   *    intersect positions, but unequal vector lengths here mean
   *    corrupted input and the library's vector kernels fail loudly

@@ -22,16 +22,17 @@ import org.apache.spark.sql.types.DecimalType
   * components. Labels only decrease, so convergence is detected by an
   * unchanged label-sum potential.
   *
-  * Lineage is truncated per iteration so the plan does not double —
-  * by default via localCheckpoint (executor-block storage, fastest);
-  * under the session's durability knob ([[Materialize.reliable]],
-  * `spark.graft.reliableCheckpoints=true`) via checkpoint() to the
-  * configured checkpoint dir, which survives executor loss: on a
+  * The symmetric edge list, the seed labels and every round's labels
+  * go through [[Materialize.truncate]], so the plan does not double
+  * per round and the session's durability knob
+  * (`spark.graft.reliableCheckpoints`) applies here as everywhere: on a
   * 1000-executor cluster a multi-hour BSP loop over localCheckpoint
   * blocks dies with the first lost executor, so production runs at
   * scale should set the knob (and `SparkContext.setCheckpointDir` on a
-  * durable FS). This is the standard BSP/Pregel shape expressed in
-  * DataFrame operators.
+  * durable FS). The truncation is eager: an eager `checkpoint()`
+  * writes each round in one job, so durable mode needs no cache to
+  * avoid recomputing a round. This is the standard BSP/Pregel shape
+  * expressed in DataFrame operators.
   */
 object ConnectedComponents {
 
@@ -60,61 +61,17 @@ object ConnectedComponents {
     * observable so tests can pin the O(log diameter) bound. */
   def runWithStats(edges: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 20): (DataFrame, Int) = {
-    val reliable = Materialize.reliable(edges.sparkSession)
-    // NON-eager truncation: the checkpoint materializes when the
-    // potential probe below runs its aggregate, so each BSP round costs
-    // ONE driver-blocking action (probe + truncate fused), not two.
-    //
-    // The reliable path additionally PERSISTS before checkpointing:
-    // RDD.checkpoint's write job otherwise RECOMPUTES the round from
-    // lineage after the probe job already computed it (the
-    // persist-or-compute-twice contract in RDD.checkpoint's own docs)
-    // — 2x work per BSP round, hours of duplicated compute on the
-    // multi-hour 100 TB loop this knob exists for. The cache is
-    // dropped right after each probe: by then the round's rows live in
-    // the checkpoint files and every later read goes there.
-    // (localCheckpoint needs none of this — it persists internally.)
-    var pending: List[DataFrame] = Nil
-    def truncate(df: DataFrame): DataFrame =
-      if (reliable) {
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        pending = df :: pending
-        df.checkpoint(eager = false)
-      } else df.localCheckpoint(eager = false)
-    def releaseCaches(): Unit = {
-      pending.foreach(_.unpersist(blocking = false))
-      pending = Nil
-    }
-
-    // sym is the per-round join input for the WHOLE loop, and — unlike
-    // the per-round labels — its non-eager reliable checkpoint never
-    // materializes: RDD.doCheckpoint only checkpoints the TOPMOST
-    // marked RDD of each job (checkpointAllMarkedAncestors defaults to
-    // false), and sym is always an ancestor of the round's labels
-    // checkpoint. So on the reliable path sym's cache IS its only
-    // protection from per-round lineage recompute: it stays persisted
-    // for the loop's lifetime and is released only on exit (every
-    // path, including the non-convergence throw). localCheckpoint
-    // needs none of this — its storage level is set at mark time and
-    // the blocks cache on first use regardless.
-    val symSrc =
+    val sym = Materialize.truncate(
       edges.select(col(aCol).as("src"), col(bCol).as("dst"))
         .union(edges.select(col(bCol).as("src"), col(aCol).as("dst")))
-        .distinct()
-    val sym =
-      if (reliable) {
-        symSrc.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        symSrc
-      } else symSrc.localCheckpoint(eager = false)
-    def releaseSym(): Unit =
-      if (reliable) symSrc.unpersist(blocking = false)
+        .distinct())
 
     // initial labels already fold in the first neighbor-min round:
     // lbl(v) = min(v, min over neighbors) is one aggregate over the
     // symmetric edge list (initial neighbor labels ARE neighbor ids),
     // saving a full join+union+agg round — for the shallow graphs that
     // near-dup clustering produces, that is a third of the loop.
-    var labels = truncate(
+    var labels = Materialize.truncate(
       sym.groupBy("src")
         .agg(least(col("src"), min(col("dst"))).as("lbl"))
         .withColumnRenamed("src", "node"))
@@ -129,15 +86,12 @@ object ConnectedComponents {
         .head().getDecimal(0))
 
     var prevSum = lblSum(labels)
-    releaseCaches() // initial labels are in their checkpoint files now
-    if (prevSum.isEmpty) { // no edges -> no nodes -> no clusters
-      releaseSym()
+    if (prevSum.isEmpty) // no edges -> no nodes -> no clusters
       return (labels.select(col("node"), col("lbl").as("cluster_id")), 0)
-    }
 
     var converged = false
     var i = 0
-    try while (!converged && i < maxIter) {
+    while (!converged && i < maxIter) {
       val nbrLabels = sym
         .join(labels.withColumnRenamed("node", "dst"), Seq("dst"))
         .select(col("src").as("node"), col("lbl"))
@@ -171,14 +125,12 @@ object ConnectedComponents {
           .select(col("node"),
             least(col("lbl"), coalesce(col("lbl2"), col("lbl")))
               .as("lbl"))
-      val next = truncate(stepped)
-      val s = lblSum(next)
-      releaseCaches() // the round is in its checkpoint files now
-      labels = next
+      labels = Materialize.truncate(stepped)
+      val s = lblSum(labels)
       converged = s == prevSum
       prevSum = s
       i += 1
-    } finally releaseSym()
+    }
     if (!converged)
       throw new IllegalStateException(
         s"connected components did not converge in $maxIter iterations; " +

@@ -157,64 +157,78 @@ object Similarity {
         .as("cn2"))
       .filter(col("cn2") > 0)
 
-  /** One exact assignment pass: every vector (array form, [[microArr]])
-    * to its nearest centroid by the scale-invariant ranking
-    * r = sign(dot)·dot²/cn2. Argmax per vector via max(struct(r,
-    * -c_id)) — the q17 trick: identical semantics to a (r DESC, c_id
-    * ASC) ranking window (ties on the exact double r break to the
-    * LOWEST c_id) but it fuses into the aggregate chain with no
-    * per-round sort.
+  /** Every (vector, centroid) score of the exact assignment ranking:
+    * (vec_id, c_id, r) with the scale-invariant r = sign(dot)·dot²/cn2
+    * for each vector (array form, [[microArr]]) against each centroid
+    * of the SUM table `cent`. An empty or NULL vector gets no rows.
+    * Shared by the assignment argmax ([[assignTo]]) and q140's probe
+    * ranking.
     *
     * r16: the dot is ONE fused native pass per (vector, centroid) pair
     * — dot128(varr, sarr), the exact int128 twin of the former
     * relational form (explode to (pos, vi), k-way broadcast-join fanout
     * on pos, sum(cast(vi as decimal(38,0)) * si) per pair in a hash
     * aggregate). Bit-identical dots by construction (graft.functions.
-    * Dot128's scaladoc carries the per-case parity argument; the
-    * nv-guard below reproduces the join's empty-vector absence), but
+    * Dot128's scaladoc carries the per-case parity argument; dropping
+    * empty/NULL vectors first reproduces their absence from the join,
+    * and dot128 would reject an empty one as a length mismatch), but
     * the per-round corpus·k-row exchange-to-aggregate machinery — the
     * heaviest stages of every Lloyd consumer, and mostly DECIMAL buffer
     * churn — collapses into a map pass over |corpus| rows. Map-side
     * assignment against a broadcast codebook is also the production IVF
     * shape at any scale: the corpus never shuffles to be assigned.
     * Centroids broadcast (k·dims rows, domain-bounded). */
-  private def assignTo(ev: DataFrame, cent: DataFrame): DataFrame = {
+  private[graft] def centroidScores(ev: DataFrame,
+      cent: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(ev.sparkSession)
-    ev.crossJoin(broadcast(centArrOf(cent)))
+    ev.filter(size(col("varr")) > 0)
+      .crossJoin(broadcast(centArrOf(cent)))
       .select(col("vec_id"), col("c_id"),
-        expr("dot128(varr, sarr)").as("dot"), size(col("varr")).as("nv"))
-      // dot IS NULL with nv = 0 ⟺ the relational join on pos produced
-      // no (vec, centroid) row at all (empty vector) — drop, matching
-      // the group's absence. dot IS NULL with nv > 0 (all-NULL
-      // elements) kept: the relational sum yielded a NULL dot row.
-      .filter(col("dot").isNotNull || col("nv") > 0)
+        expr("dot128(varr, sarr)").as("dot"))
       .join(broadcast(centNorms(cent)), Seq("c_id"))
-      .withColumn("r", expr(
+      .select(col("vec_id"), col("c_id"), expr(
         """(case when dot >= 0 then 1.0d else -1.0d end)
            * cast(dot as double) * cast(dot as double)
-           / cast(cn2 as double)"""))
+           / cast(cn2 as double)""").as("r"))
+  }
+
+  /** One exact assignment pass: every vector to its nearest centroid by
+    * [[centroidScores]]' r. Argmax per vector via max(struct(r,
+    * -c_id)) — the q17 trick: identical semantics to a (r DESC, c_id
+    * ASC) ranking window (ties on the exact double r break to the
+    * LOWEST c_id) but it fuses into the aggregate chain with no
+    * per-round sort. */
+  private def assignTo(ev: DataFrame, cent: DataFrame): DataFrame =
+    centroidScores(ev, cent)
       .groupBy("vec_id")
       .agg(max(struct(col("r"), (-col("c_id")).as("nc"))).as("m"))
       .select(col("vec_id"), (-col("m.nc")).as("c_id"))
+
+  /** `n` full Lloyd rounds (assign + recompute) over the micro-unit
+    * array frame `ev`, from the centroid SUM table `seed` ((c_id, pos,
+    * si) rows); returns the last recomputed table. The seed and every
+    * round's table go through Materialize.truncate: a centroid table
+    * has TWO consumers per round (the norm agg and the assignment), so
+    * as a lazy lineage the prior rounds' subtree is duplicated under
+    * each and the work doubles per round — 3 unrolled lazy rounds
+    * benched 4.5 s at sf0.1 vs 0.6 s for one (exchange reuse does not
+    * collapse the copies: each sits under a differently-keyed
+    * broadcast). Pinning the k·dims-row table costs one tiny job per
+    * round and keeps training linear in `n`. */
+  private def lloydRounds(ev: DataFrame, seed: DataFrame,
+      n: Int): DataFrame = {
+    val el = longOf(ev)
+    (1 to n).foldLeft(graft.operators.Materialize.truncate(seed)) {
+      (cent, _) => graft.operators.Materialize.truncate(
+        el.join(assignTo(ev, cent), Seq("vec_id"))
+          .groupBy("c_id", "pos").agg(sum("vi").as("si")))
+    }
   }
 
   /** q50's Lloyd loop (k = 16 seeded from the first 16 vectors):
-    * `iters` assign/recompute rounds over a micro-unit long format,
-    * returning the final (vec_id, c_id) assignment.
-    *
-    * Each round's centroid table IS materialized (k·dims rows — 16
-    * centroids, one row per dimension — through the durable-checkpoint
-    * knob like every other multi-consumer state in the library).
-    * Measured reason: cent has TWO consumers per round (the norm agg
-    * and the assignment join), so as a pure lazy lineage the prior
-    * rounds' subtree is duplicated under each consumer and the work
-    * doubles per round — 3 unrolled lazy rounds benched 4.5 s at sf0.1
-    * vs 0.6 s for one round (≈ the 1+2+4 geometric sum), and exchange
-    * reuse does NOT collapse the copies because each appears under a
-    * differently-keyed broadcast. Truncating the k·dims-row table per
-    * round makes training time linear in `iters` for the cost of one
-    * tiny per-round job — the same trade ConnectedComponents makes for
-    * its pointer-doubling rounds.
+    * `iters` assignments and `iters - 1` recomputes ([[lloydRounds]])
+    * over the micro-unit array format, returning the final (vec_id,
+    * c_id) assignment.
     *
     * Exactness by construction, so the DuckDB oracle replays every
     * round bit-identically: vi = floor(v·1e6 + 0.5) are exact BIGINTs;
@@ -225,10 +239,9 @@ object Similarity {
     * the only doubles are the final ranking values r = sign(dot)·dot²
     * /cn2, derived from identical exact integers by identical IEEE ops
     * in both engines. Ties break on c_id. Scale shape per round: one
-    * broadcast join on pos (centroids are k·dims rows), one partial
-    * agg to (vec_id, c_id), one per-vector max(struct) argmax agg, one
-    * (c_id, pos) agg — the corpus shuffles on vec_id once per round,
-    * centroids never shuffle. */
+    * map-side dot128 pass against the broadcast codebook, one
+    * per-vector argmax agg, one (c_id, pos) recompute agg; centroids
+    * never shuffle. */
   private[graft] def lloydAssignments(s: SparkSession, d: String,
       iters: Int): DataFrame = {
     // Parallelism.widen BEFORE the checkpoint (r15): the micro-unit
@@ -250,27 +263,14 @@ object Similarity {
     // the explode ever being re-planned from the scan.
     val ev = graft.operators.Materialize.truncate(
       graft.operators.Parallelism.widen(microArr(emb(s, d)), col("vec_id")))
-    val el = longOf(ev)
-    var cent = graft.operators.Materialize.truncate(
-      el.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("c_id"), col("pos"), col("vi").as("si")))
-    var asg: DataFrame = ev.sparkSession.emptyDataFrame
-    for (i <- 1 to iters) {
-      asg = assignTo(ev, cent)
-      // the final round's recomputed centroids have no consumer — an
-      // eager materialization there would be a pure waste job
-      if (i < iters) cent = graft.operators.Materialize.truncate(
-        el.join(asg, Seq("vec_id"))
-          .groupBy("c_id", "pos").agg(sum("vi").as("si")))
-    }
-    // the final ASSIGNMENT does have two consumers in q50 (the probe's
-    // cluster pick and the inverted-list join), and as a lazy lineage
-    // the whole last assign round would compute once under each — the
-    // same double-consumer trap the per-round centroid truncation
-    // exists for, just one level up. It is |corpus| rows but only two
-    // longs wide, so pinning it costs one narrow job and halves the
-    // most expensive round.
-    graft.operators.Materialize.truncate(asg)
+    val seed = longOf(ev).filter(col("vec_id") < 16)
+      .select(col("vec_id").as("c_id"), col("pos"), col("vi").as("si"))
+    // iters - 1 recomputes: the last round's centroids would have no
+    // consumer. The final ASSIGNMENT has two in q50 (the probe's
+    // cluster pick and the inverted-list join); pinning it (|corpus|
+    // rows, two longs wide) keeps the last round from computing twice.
+    graft.operators.Materialize.truncate(
+      assignTo(ev, lloydRounds(ev, seed, iters - 1)))
   }
 
   /** q139's keep rule: a deterministic 75% content-hash sample — md5
@@ -294,7 +294,8 @@ object Similarity {
 
   /** iters full Lloyd rounds (assign + recompute, INCLUDING the final
     * recompute) over an already-materialized micro-unit array frame
-    * `ev`, seeded from its 16 lowest vec_ids; returns the final
+    * `ev`, seeded from its 16 lowest non-empty vec_ids (the oracles'
+    * `SELECT DISTINCT vec_id FROM el`); returns the final
     * centroid SUM-vector table (k·dims rows, materialized). This is
     * the TRAINING half used when training input ≠ assignment input
     * (q139 trains on a sample, q140 routes probes against the final
@@ -302,20 +303,13 @@ object Similarity {
     * centroids DO have consumers here, so the extra recompute is paid
     * deliberately. */
   private[graft] def lloydCentroids(ev: DataFrame, iters: Int): DataFrame = {
-    val el = longOf(ev)
-    val seeds = ev.select("vec_id").distinct()
+    val seeds = ev.filter(size(col("varr")) > 0).select("vec_id").distinct()
       .orderBy("vec_id").limit(16)
       .select(col("vec_id").as("c_id"))
-    var cent = graft.operators.Materialize.truncate(
-      el.join(broadcast(seeds), col("vec_id") === col("c_id"))
-        .select(col("c_id"), col("pos"), col("vi").as("si")))
-    for (_ <- 1 to iters) {
-      val asg = assignTo(ev, cent)
-      cent = graft.operators.Materialize.truncate(
-        el.join(asg, Seq("vec_id"))
-          .groupBy("c_id", "pos").agg(sum("vi").as("si")))
-    }
-    cent
+    lloydRounds(ev,
+      longOf(ev).join(broadcast(seeds), col("vec_id") === col("c_id"))
+        .select(col("c_id"), col("pos"), col("vi").as("si")),
+      iters)
   }
 
   /** The q50 oracle's unrolled Lloyd rounds: CTEs n_i (norms), s_i
@@ -830,7 +824,8 @@ object Similarity {
         .join(broadcast(bestC), Seq("c_id"))
         .filter(col("vec_id") =!= 0)
       val scanned = cand.agg(count(lit(1)).as("n_scanned"))
-      val ntrain = evS.select("vec_id").distinct()
+      val ntrain = evS.filter(size(col("varr")) > 0).select("vec_id")
+        .distinct()
         .agg(count(lit(1)).as("n_train"))
       val top = cand.crossJoin(broadcast(probe))
         .select(col("vec_id"), round(cosine("embedding", "pe"), 4).as("sim"))
@@ -864,17 +859,9 @@ object Similarity {
         graft.operators.Parallelism.widen(microArr(e), col("vec_id")))
       val cent = lloydCentroids(ev, 3)
       val lists = graft.operators.Materialize.truncate(assignTo(ev, cent))
-      // probe ranking = the assignment's fused dot128 against the same
-      // broadcast codebook (r16, same rewrite as assignTo — one row per
-      // (probe, centroid) instead of the k·dims join fanout)
-      val pr = ev.filter(col("vec_id") === 0)
-        .crossJoin(broadcast(centArrOf(cent)))
-        .select(col("c_id"), expr("dot128(varr, sarr)").as("dot"))
-        .join(broadcast(centNorms(cent)), Seq("c_id"))
-        .withColumn("r", expr(
-          """(case when dot >= 0 then 1.0d else -1.0d end)
-             * cast(dot as double) * cast(dot as double)
-             / cast(cn2 as double)"""))
+      // probe ranking = the assignment's own scorer against the same
+      // broadcast codebook; an empty probe ranks no centroids
+      val pr = centroidScores(ev.filter(col("vec_id") === 0), cent)
         .orderBy(col("r").desc, col("c_id")).limit(2)
         .select("c_id")
       val cand = e.join(lists, Seq("vec_id"))
@@ -1229,10 +1216,10 @@ object Similarity {
                WHERE hk NOT IN ('c', 'd', 'e', 'f')),
           els AS (SELECT el.* FROM el JOIN samp USING (vec_id)),
           -- seeds and n_train read from els' DISTINCT vec_ids, not from
-          -- samp: the Scala side derives both from the EXPLODED sample
-          -- (lloydCentroids seeds / the elS distinct count), where an
-          -- empty-embedding doc contributes zero rows. Deriving from
-          -- samp agreed only by md5-accident (md5('') starts with 'd',
+          -- samp: the Scala side derives both from the non-empty
+          -- sampled vectors (size(varr) > 0 in lloydCentroids' seeds
+          -- and n_train), the docs that contribute rows here. Deriving
+          -- from samp agreed only by md5-accident (md5('') starts with 'd',
           -- so an empty doc can never pass the keep rule today) —
           -- structural equality must not lean on that (ADVICE r10).
           c0 AS (SELECT vec_id AS c_id, pos, vi AS si FROM els

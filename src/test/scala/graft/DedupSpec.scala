@@ -170,9 +170,8 @@ class DedupSpec extends SparkSpec {
       val written = java.nio.file.Files.walk(dir)
         .filter(p => java.nio.file.Files.isRegularFile(p)).count()
       assert(written > 0, "reliable CC must write durable checkpoints")
-      // the r13 persist-before-checkpoint fix (stops the checkpoint
-      // write from recomputing each round) must also RELEASE every
-      // round's cache once the checkpoint files hold the data — a
+      // each round is written by an eager checkpoint() in one job, so
+      // no round needs a cache; none may be left behind either — a
       // leaked cache per BSP round would fill executor storage over a
       // multi-hour 100 TB loop
       assert(spark.sparkContext.getPersistentRDDs.size <= before,
@@ -186,13 +185,19 @@ class DedupSpec extends SparkSpec {
     // default mode (localCheckpoint) vs reliable mode (durable
     // checkpoint()) must produce identical results, reliable mode must
     // actually write to the checkpoint dir, and reliable without a
-    // checkpoint dir must fail fast
+    // checkpoint dir must fail fast. q50 (the Lloyd rounds) and q67
+    // (ConnectedComponents' BSP rounds) take the iterative loops
+    // through the same knob.
     val key = graft.operators.Materialize.ReliableKey
-    val base = SparkEntry.queries("q103_prefix_jaccard")(spark, sf)
-      .collect().map(_.toSeq).toSet
-    val triBase = SparkEntry.queries("q104_triangles")(spark, sf)
-      .collect().map(_.toSeq).toSeq
-    assert(base.nonEmpty)
+    def run(q: String) =
+      SparkEntry.queries(q)(spark, sf).collect().map(_.toSeq)
+    def files(dir: java.nio.file.Path): Long = java.nio.file.Files.walk(dir)
+      .filter(p => java.nio.file.Files.isRegularFile(p)).count()
+    val base = run("q103_prefix_jaccard").toSet
+    val triBase = run("q104_triangles").toSeq
+    val loops = Seq("q50_ivf_kmeans", "q67_dedup_clusters")
+    val loopBase = loops.map(q => q -> run(q).toSet).toMap
+    assert(base.nonEmpty && loopBase.values.forall(_.nonEmpty))
     spark.conf.set(key, "true")
     try {
       spark.sparkContext.setCheckpointDir(null)
@@ -201,15 +206,16 @@ class DedupSpec extends SparkSpec {
       }
       val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
       spark.sparkContext.setCheckpointDir(dir.toString)
-      val rel = SparkEntry.queries("q103_prefix_jaccard")(spark, sf)
-        .collect().map(_.toSeq).toSet
+      val rel = run("q103_prefix_jaccard").toSet
       assert(rel == base, "reliable mode changed q103 results")
-      val written = java.nio.file.Files.walk(dir)
-        .filter(p => java.nio.file.Files.isRegularFile(p)).count()
-      assert(written > 0, "reliable mode must write durable checkpoints")
-      val tri = SparkEntry.queries("q104_triangles")(spark, sf)
-        .collect().map(_.toSeq).toSeq
+      assert(files(dir) > 0, "reliable mode must write durable checkpoints")
+      val tri = run("q104_triangles").toSeq
       assert(tri == triBase, "reliable mode changed q104 results")
+      loops.foreach { q =>
+        val before = files(dir)
+        assert(run(q).toSet == loopBase(q), s"reliable mode changed $q results")
+        assert(files(dir) > before, s"reliable $q must write durable checkpoints")
+      }
     } finally {
       spark.conf.unset(key)
       spark.sparkContext.setCheckpointDir(null)

@@ -81,8 +81,10 @@ class PlanAuditSpec extends SparkSpec {
       "queries/Analytics.scala" -> 9, // 1-row stats/probes/grids
       "queries/Dedup.scala" -> 10, // probe rows, <=k candidate sets
       "queries/Relational.scala" -> 7, // dims, cutpoints, 1-row stats
-      "queries/Similarity.scala" -> 29, // codebooks, probes, 1-row sums
-        // (+2 in r12: q144's 1-row probe embedding + probe projection)
+      "queries/Similarity.scala" -> 27, // codebooks, probes, 1-row sums
+        // (+2 in r12: q144's 1-row probe embedding + probe projection;
+        // -2 in r18: q140's probe shares centroidScores' two codebook
+        // broadcasts instead of repeating them)
       "queries/TextOps.scala" -> 14, // 1-row totals/argmax, lang tables,
         // <=k MG candidates, freq-k boiler dict
       "streaming/StreamJoins.scala" -> 1, // event-type dim

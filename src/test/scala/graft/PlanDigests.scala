@@ -62,8 +62,11 @@ object PlanDigests {
     // TakeOrdereds, and the corpus parquet scans for the exact arms.
     // An Exchange or aggregate reappearing beyond this means training
     // work leaked out of the checkpoints (the q50 class of drift).
+    // r18: +1 Filter — n_train counts only the non-empty sampled
+    // vectors (size(varr) > 0 over the training checkpoint), as the
+    // oracle's count(DISTINCT vec_id) FROM els does (plans/r18/).
     "q139_ivf_sampled" ->
-      "AQEShuffleRead x1 | BroadcastExchange x7 | BroadcastHashJoin x5 | BroadcastNestedLoopJoin x4 | ColumnarToRow x4 | Exchange x3 | Filter x7 | HashAggregate x8 | Project x11 | ReusedExchange x2 | Scan ExistingRDD x4 | Scan parquet x4 | TakeOrderedAndProject x2",
+      "AQEShuffleRead x1 | BroadcastExchange x7 | BroadcastHashJoin x5 | BroadcastNestedLoopJoin x4 | ColumnarToRow x4 | Exchange x3 | Filter x8 | HashAggregate x8 | Project x11 | ReusedExchange x2 | Scan ExistingRDD x4 | Scan parquet x4 | TakeOrderedAndProject x2",
     // r10: multi-probe over the learned codebook — same checkpointed
     // training, plus the probe's 16-row centroid ranking (one extra
     // TakeOrdered) and the 2-list candidate join.

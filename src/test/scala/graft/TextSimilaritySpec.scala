@@ -302,6 +302,35 @@ class TextSimilaritySpec extends SparkSpec {
       s"nprobe=1 recall floor (40/50 = 80%) violated: $r1, $r3")
   }
 
+  test("centroid scores: an empty vector gets no rows, a non-empty one " +
+      "gets one per centroid") {
+    // the scorer q140's probe shares with the assignment: an empty
+    // vector joins no centroid position in the oracle's
+    // `el JOIN c USING (pos)`, so it must rank no centroid here either
+    val ev = Seq((0L, Seq.empty[Long]), (1L, Seq(3L, -4L)))
+      .toDF("vec_id", "varr")
+    val cent = Seq((0L, 0L, 1L), (0L, 1L, 0L), (1L, 0L, 0L), (1L, 1L, 1L),
+        (2L, 0L, 2L), (2L, 1L, -2L))
+      .toDF("c_id", "pos", "si")
+    val got = graft.queries.Similarity.centroidScores(ev, cent)
+      .select("vec_id", "c_id").as[(Long, Long)].collect()
+    assert(got.count(_._1 == 0L) == 0, s"empty vector scored: ${got.toSeq}")
+    assert(got.filter(_._1 == 1L).map(_._2).sorted.toSeq == Seq(0L, 1L, 2L))
+  }
+
+  test("Lloyd seeds skip empty vectors: 16 seeds from the non-empty ids") {
+    // vec 0 is empty, vecs 1..20 are not: the oracles seed from
+    // `SELECT DISTINCT vec_id FROM el`, where vec 0 has no rows, so the
+    // 16 seeds are vecs 1..16 (seeding by rank over all ids would spend
+    // one seed on vec 0 and train only 15 centroids)
+    val ev = ((0L, Seq.empty[Long]) +:
+        (1L to 20L).map(i => (i, Seq(i, 21L - i, i * i))))
+      .toDF("vec_id", "varr")
+    val ids = graft.queries.Similarity.lloydCentroids(ev, 0)
+      .select("c_id").distinct().as[Long].collect().sorted.toSeq
+    assert(ids == (1L to 16L), s"seed c_ids: $ids")
+  }
+
   test("IVF-PQ ADC: distances non-decreasing, bounded below by PQ error") {
     val rows = SparkEntry.queries("q116_ivf_pq")(spark, sf).collect()
     assert(rows.length == 5, "the probe's inverted list must hold >= 5 vecs")
